@@ -124,8 +124,14 @@ class CdcPipeline:
         return self._finish(out)
 
     def quarantine(self, records: DataFrame) -> DataFrame:
-        """Rows that failed per-record processing (A3 dead letters)."""
-        return quarantine(records, pk_filters=self.pk_filters)
+        """Rows that failed per-record processing (A3 dead letters), with
+        `images_url` built from the pipeline's own claim-check config."""
+        return quarantine(
+            records,
+            pk_filters=self.pk_filters,
+            claim_check_base=self.claim_check_base,
+            claim_check_threshold=self.claim_check_threshold,
+        )
 
     def published(self, records: DataFrame) -> DataFrame:
         """Change events wrapped in the publish envelope (A11)."""

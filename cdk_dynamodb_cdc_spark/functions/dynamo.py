@@ -7,9 +7,10 @@ AttributeValue encoding (``{"S": ...}``, ``{"N": "1.5"}``, ``{"M": {...}}``,
 delegates to the public ``@aws-sdk/util-dynamodb`` ``unmarshall``).
 
 This module is the Spark-native equivalent: a pure-Python codec (unit
-testable without a JVM) plus Arrow-vectorized pandas-UDF wrappers used in
-the dynamic-schema lane. The typed lane never needs this — a declared
-StructType lets ``from_json`` + column expressions do the work JVM-side.
+testable without a JVM) that the dynamic-schema lane calls once per
+record inside its single ``mapInPandas`` (``operators/pipeline.py``). The
+typed lane never needs this — a declared StructType lets ``from_json`` +
+column expressions do the work JVM-side.
 
 Type mapping (SURVEY.md §1.2):
   S -> str, N -> int|Decimal (DynamoDB numbers are arbitrary-precision
@@ -27,9 +28,10 @@ import json
 from decimal import Decimal
 from typing import Any
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+# DynamoDB's number range: magnitudes from 1E-130 to 9.99...E+125, i.e.
+# adjusted (scientific) exponents -130..125, plus zero.
+_N_MIN_EXP, _N_MAX_EXP = -130, 125
+_N_INT_BOUND = 10 ** (_N_MAX_EXP + 1)
 
 
 def parse_number(n: str) -> int | Decimal:
@@ -38,37 +40,58 @@ def parse_number(n: str) -> int | Decimal:
     Integral strings parse to Python int (exact, unbounded) so that e.g.
     an 18-digit id survives round-tripping; anything else parses to
     ``decimal.Decimal`` — exact as well, where a float would silently
-    truncate past ~17 significant digits.
+    truncate past ~17 significant digits. Zero in any spelling parses to
+    the int 0. Precision is not capped, but a value outside DynamoDB's
+    range (NaN, infinities, or a magnitude beyond 1E-130..9.99...E+125)
+    raises ``ValueError``: a 17-byte ``1e100000000`` would otherwise
+    serialize as a 100 MB fixed-point number.
     """
-    try:
-        return int(n)
-    except ValueError:
-        return Decimal(n)
+    # int() rejects any string with a point, and its failure is costly
+    if isinstance(n, str) and "." in n:
+        num = Decimal(n)
+    else:
+        try:
+            num = int(n)
+        except ValueError:
+            num = Decimal(n)
+    if not num:
+        return 0  # also a zero spelled '0E-999999999'
+    if isinstance(num, int):
+        if -_N_INT_BOUND < num < _N_INT_BOUND:
+            return num
+    elif num.is_finite() and _N_MIN_EXP <= num.adjusted() <= _N_MAX_EXP:
+        return num
+    raise ValueError(f"N value outside DynamoDB's number range: {n!r}")
 
 
 def unmarshall_value(av: Any) -> Any:
-    """Convert one AttributeValue node ``{tag: payload}`` to plain JSON."""
-    if not isinstance(av, dict) or len(av) != 1:
-        raise ValueError(f"not an AttributeValue: {av!r}")
-    tag, payload = next(iter(av.items()))
+    """Convert one AttributeValue node ``{tag: payload}`` to plain JSON.
+
+    Tags are tested in order of frequency in typical items; every
+    malformed node raises the same exception type and message whatever
+    the order, since the dead-letter ``error`` column records them."""
+    try:
+        (tag, payload), = av.items()
+    except (AttributeError, ValueError):
+        raise ValueError(f"not an AttributeValue: {av!r}") from None
     if tag == "S":
         return payload
+    if tag == "M":
+        return {k: unmarshall_value(v) for k, v in payload.items()}
     if tag == "N":
         return parse_number(payload)
+    if tag == "L":
+        return [unmarshall_value(v) for v in payload]
     if tag == "BOOL":
         return bool(payload)
     if tag == "NULL":
         return None
-    if tag == "M":
-        return {k: unmarshall_value(v) for k, v in payload.items()}
-    if tag == "L":
-        return [unmarshall_value(v) for v in payload]
     if tag == "SS":
         return sorted(payload)
     if tag == "NS":
         # int and Decimal order correctly under direct comparison — no
         # float key, which would collapse near-equal high-precision values
-        return sorted(parse_number(v) for v in payload)
+        return sorted(map(parse_number, payload))
     if tag == "BS":
         return sorted(payload)
     if tag == "B":
@@ -107,47 +130,42 @@ def canonical_decimal(d: Decimal) -> str:
     return "0" if s in ("-0", "") else s
 
 
+# Stand-in for a Decimal while the C encoder runs (see dumps_canonical);
+# control characters encode as escapes, so user text rarely equals it.
+_DECIMAL_MARK = "\x00decimal\x00"
+_QUOTED_MARK = json.dumps(_DECIMAL_MARK)
+
+
 def dumps_canonical(obj: Any) -> str:
-    """Canonical compact JSON (sorted keys) with exact Decimal support.
+    """Canonical compact JSON (sorted keys) with exact Decimal support:
+    the bytes of ``json.dumps(obj, sort_keys=True, separators=(",", ":"))``,
+    with each Decimal written as its :func:`canonical_decimal` number.
 
-    ``json.dumps`` cannot emit a Decimal as an unquoted number (its
-    ``default`` hook re-serializes), so this is a small recursive
-    serializer producing the same bytes as
-    ``json.dumps(obj, sort_keys=True, separators=(",", ":"))`` for
-    non-Decimal input."""
-    return "".join(_canonical_parts(obj))
+    The C encoder cannot emit an unquoted number from its ``default``
+    hook, so the hook stands each Decimal in as a marker string and
+    records its text; the marker's encoded form is then replaced by the
+    recorded texts in order. A JSON string never contains an unescaped
+    quote, so the quoted marker only matches a whole string equal to it;
+    if the input holds such a string or key, the count of matches
+    exceeds the count of Decimals and the encoding is redone with a
+    longer marker."""
+    mark, quoted = _DECIMAL_MARK, _QUOTED_MARK
+    while True:
+        texts: list[str] = []
 
+        def default(o: Any) -> str:
+            if isinstance(o, Decimal):
+                texts.append(canonical_decimal(o))
+                return mark
+            raise TypeError(f"not JSON-serializable: {type(o)}")
 
-def _canonical_parts(obj: Any):
-    if obj is None or isinstance(obj, (bool, int, float, str)):
-        yield json.dumps(obj)
-    elif isinstance(obj, Decimal):
-        yield canonical_decimal(obj)
-    elif isinstance(obj, dict):
-        yield "{"
-        first = True
-        for k in sorted(obj):
-            if not first:
-                yield ","
-            first = False
-            yield json.dumps(k)
-            yield ":"
-            yield from _canonical_parts(obj[k])
-        yield "}"
-    elif isinstance(obj, (list, tuple)):
-        yield "["
-        first = True
-        for v in obj:
-            if not first:
-                yield ","
-            first = False
-            yield from _canonical_parts(v)
-        yield "]"
-    else:
-        raise TypeError(f"not JSON-serializable: {type(obj)}")
-
-
-@F.pandas_udf(T.StringType())
-def unmarshall_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized column wrapper for the dynamic lane."""
-    return s.map(unmarshall_json, na_action="ignore")
+        out = json.dumps(obj, sort_keys=True, separators=(",", ":"),
+                         default=default)
+        if not texts:
+            return out
+        parts = out.split(quoted)
+        if len(parts) == len(texts) + 1:
+            texts.append("")
+            return "".join([x for pair in zip(parts, texts) for x in pair])
+        mark += "\x00"
+        quoted = json.dumps(mark)

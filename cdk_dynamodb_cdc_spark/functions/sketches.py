@@ -387,12 +387,12 @@ def bloom_contains(
     columns). False positives pass (bounded rate); members always
     pass (no false negatives).
 
-    The packed table rides as ONE array ``Literal`` (``F.lit(list)``),
-    not a ``CreateArray`` of m/64 scalar literals: the element-wise
-    form is rebuilt per evaluation site in generated code (1024
-    assignments per probe for the 64 Kbit filter, 4 probes per key),
-    which measured ~3-4x slower than the single-literal form on the
-    decontamination gram stream — r14 optimization round."""
+    The packed table is built with ``F.lit(list)``. Under PySpark 4.1
+    that is the same ``CreateArray`` of m/64 scalar literals as
+    ``F.array(*lits)``: both analyse to ``array(...)``, and the optimizer
+    folds both into one array literal. So the literal form did not make
+    the decontamination queries faster; their single-pass restructure
+    did (OPTIMIZATION_r14.md §3)."""
     words_lit = F.lit([int(w) for w in words])
     out = None
     for s in range(k):

@@ -206,3 +206,29 @@ def test_observation_metrics_piggyback_single_pass(spark):
     expected_pass = sum(1 for i in range(300) if 10 + i % 50 >= 30)
     assert survivors == expected_pass
     assert got["chars_in"] == sum(10 + i % 50 for i in range(300))
+
+
+def test_quarantine_uses_configured_claim_check(spark):
+    """Dead letters carry `images_url` from the pipeline's own
+    claim-check base and threshold, like its events do."""
+    from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
+
+    good = json.dumps({"v": {"S": "x"}})
+    records = spark.createDataFrame(
+        [
+            # oversized for the configured threshold, small for the default
+            ("ev-bad-big", 1, None, "MODIFY", "P#1", "S", "{not json", good, 5000),
+            ("ev-bad-small", 2, None, "MODIFY", "P#2", "S", "{not json", good, 100),
+            ("ev-ok-big", 3, None, "INSERT", "P#3", "S", None, good, 5000),
+        ],
+        schema=CDC_RECORD_SCHEMA,
+    )
+    pipe = CdcPipeline(
+        claim_check_base="s3://side-store/images/", claim_check_threshold=1000
+    )
+    dead = {r.event_id: r for r in pipe.quarantine(records).collect()}
+    assert set(dead) == {"ev-bad-big", "ev-bad-small"}
+    assert dead["ev-bad-big"].images_url == "s3://side-store/images/ev-bad-big.json"
+    assert dead["ev-bad-small"].images_url is None
+    events = {r.event_id: r for r in pipe.events(records).collect()}
+    assert events["ev-ok-big"].images_url == "s3://side-store/images/ev-ok-big.json"

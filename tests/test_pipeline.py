@@ -9,6 +9,7 @@ from cdk_dynamodb_cdc_spark.operators.claim_check import (
     write_side_store,
 )
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
+    _diff_record,
     cdc_change_events,
     pk_filter,
     publish,
@@ -96,6 +97,45 @@ def test_quarantine_collects_parse_errors(spark):
     q = quarantine(cdc_fixture_df(spark)).collect()
     assert [r["event_id"] for r in q] == ["ev-malformed"]
     assert "JSONDecodeError" in q[0]["error"]
+
+
+def _plan_node_names(df) -> list[str]:
+    """Class names of every node of the physical plan (AQE unwrapped)."""
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(node.executedPlan())
+            return
+        yield name
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_one_python_evaluation_per_plan(spark):
+    """Events and dead letters each evaluate the Python diff once: a
+    scalar UDF would be inlined by Catalyst into both the no-op filter
+    and the projection, running the diff twice per record."""
+    src = cdc_fixture_df(spark)
+    for df in (cdc_change_events(src), quarantine(src)):
+        python_nodes = [
+            n for n in _plan_node_names(df)
+            if "Python" in n or "Pandas" in n or "InArrow" in n
+        ]
+        assert python_nodes == ["MapInPandasExec"], python_nodes
+
+
+def test_out_of_range_numbers_dead_letter():
+    """A non-finite or out-of-range N fails its record, which then
+    dead-letters instead of emitting non-standard or huge JSON."""
+    for n in ("1e100000000", "sNaN", "NaN", "Infinity"):
+        wire = json.dumps({"v": {"N": n}})
+        out = _diff_record(wire, None, None, "P#1", None)
+        assert out[:7] == (None,) * 7
+        assert out[7] == f"ValueError: N value outside DynamoDB's number range: {n!r}"
 
 
 def test_pk_filter_exact_and_prefix(spark):
