@@ -84,14 +84,20 @@ class CdcPipeline:
 
     # -- batch lane -------------------------------------------------------
 
+    def _prepare(self, records: DataFrame) -> DataFrame:
+        """Record preparation shared by events and dead letters, so both
+        see the same images: old-image reconstruction when enabled."""
+        if self.reconstruct_missing_old:
+            return reconstruct_old_images(records)
+        return records
+
     def events(self, records: DataFrame) -> DataFrame:
         """records (CDC_RECORD_SCHEMA) -> change events.
 
         Typed lane when `item_schema` is declared (pure JVM), dynamic
         lane otherwise; optional old-image reconstruction first; the
         custom transform last."""
-        if self.reconstruct_missing_old:
-            records = reconstruct_old_images(records)
+        records = self._prepare(records)
         schema = self.item_schema
         if schema == "infer":
             # drift-profile schema inference (operators/monitor.py):
@@ -125,9 +131,10 @@ class CdcPipeline:
 
     def quarantine(self, records: DataFrame) -> DataFrame:
         """Rows that failed per-record processing (A3 dead letters), with
-        `images_url` built from the pipeline's own claim-check config."""
+        `images_url` built from the pipeline's own claim-check config and
+        the same record preparation as :meth:`events`."""
         return quarantine(
-            records,
+            self._prepare(records),
             pk_filters=self.pk_filters,
             claim_check_base=self.claim_check_base,
             claim_check_threshold=self.claim_check_threshold,

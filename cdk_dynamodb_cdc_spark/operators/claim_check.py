@@ -22,10 +22,31 @@ permanent — access to the offloaded images.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
+
+
+def claim_check_columns(
+    threshold: int = CLAIM_CHECK_THRESHOLD, base: str | None = None
+) -> tuple[Column, Column]:
+    """``(small, images_url)`` for a record row: whether its images are
+    inlined, and otherwise the pointer ``<base><event_id>.json``.
+
+    Reference: `if (size && size < SIZE_THRESHOLD)` (:134) — a missing or
+    zero SizeBytes is falsy in JS and takes the claim-check branch."""
+    small = (
+        F.col("size_bytes").isNotNull()
+        & (F.col("size_bytes") != 0)
+        & (F.col("size_bytes") < F.lit(threshold))
+    )
+    images_url = F.when(
+        ~small,
+        F.concat(F.lit(base or "claim-check://images/"), F.col("event_id"),
+                 F.lit(".json")),
+    )
+    return small, images_url
 
 
 def side_store_writes(

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdk_dynamodb_cdc_spark.operators.claim_check import claim_check_columns
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 
@@ -293,19 +294,7 @@ def cdc_change_events_typed(
         all_equal = all_equal & fe
     noop = (F.col("operation") == "MODIFY") & all_equal
     ok = base.filter(~noop)
-    small = (
-        F.col("size_bytes").isNotNull()
-        & (F.col("size_bytes") != 0)
-        & (F.col("size_bytes") < F.lit(claim_check_threshold))
-    )
-    images_url = F.when(
-        ~small,
-        F.concat(
-            F.lit(claim_check_base or "claim-check://images/"),
-            F.col("event_id"),
-            F.lit(".json"),
-        ),
-    )
+    small, images_url = claim_check_columns(claim_check_threshold, claim_check_base)
     return ok.select(
         "event_id",
         "seq",

@@ -232,3 +232,27 @@ def test_quarantine_uses_configured_claim_check(spark):
     assert dead["ev-bad-small"].images_url is None
     events = {r.event_id: r for r in pipe.events(records).collect()}
     assert events["ev-ok-big"].images_url == "s3://side-store/images/ev-ok-big.json"
+
+
+def test_quarantine_sees_reconstructed_old_images(spark):
+    """With reconstruction on, a record whose reconstructed old image is
+    malformed dead-letters: every input record is an event or a dead
+    letter, never both and never neither."""
+    from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
+
+    records = spark.createDataFrame(
+        [
+            ("e1", 1, None, "INSERT", "P#1", "S", None, "{not json", 100),
+            ("e2", 2, None, "MODIFY", "P#1", "S", None,
+             json.dumps({"v": {"S": "a"}}), 100),
+            ("e3", 3, None, "MODIFY", "P#1", "S", None,
+             json.dumps({"v": {"S": "b"}}), 100),
+        ],
+        schema=CDC_RECORD_SCHEMA,
+    )
+    pipe = CdcPipeline(reconstruct_missing_old=True)
+    events = sorted(r.event_id for r in pipe.events(records).collect())
+    dead = sorted(r.event_id for r in pipe.quarantine(records).collect())
+    assert events == ["e3"]
+    assert dead == ["e1", "e2"]
+    assert sorted(events + dead) == ["e1", "e2", "e3"]

@@ -1,8 +1,10 @@
 """Unit tests for the AttributeValue codec (no JVM needed)."""
 
 import json
+import sys
 from decimal import Decimal
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -15,6 +17,13 @@ from cdk_dynamodb_cdc_spark.functions.dynamo import (
     unmarshall,
     unmarshall_json,
     unmarshall_value,
+)
+from cdk_dynamodb_cdc_spark.functions.diff import compare_images
+from cdk_dynamodb_cdc_spark.operators.pipeline import (
+    _dead_letter_batches,
+    _diff_batches,
+    _diff_record,
+    _parse_record,
 )
 
 
@@ -338,3 +347,109 @@ def test_generated_numbers_parse_like_reference(n):
     got, ref = parse_number(n), _reference_parse_number(n)
     assert got == ref
     assert _reference_dumps(got) == _reference_dumps(ref)
+
+
+# --- the per-record split: only the parse can fail --------------------------
+
+
+_json_values = st.recursive(
+    st.one_of(st.none(), st.booleans(), st.integers(-(2**70), 2**70),
+              st.floats(), _text),
+    lambda kids: st.one_of(st.lists(kids, max_size=4),
+                           st.dictionaries(_text, kids, max_size=4)),
+    max_leaves=12,
+)
+# S/B/SS/BS payloads come back from unmarshall as they are on the wire,
+# so they may hold any JSON value: documents, lists, NaN, mixed sets.
+_payload_values = st.one_of(
+    st.builds(lambda v: {"S": v}, _json_values),
+    st.builds(lambda v: {"B": v}, _json_values),
+    st.builds(lambda v: {"SS": v}, st.lists(_json_values, max_size=3)),
+    st.builds(lambda v: {"BS": v}, st.lists(_json_values, max_size=3)),
+)
+_item_values = st.one_of(
+    _attribute_values(malformed=True),
+    _payload_values,
+    st.builds(lambda av: {"M": {"x": {"L": [av]}}}, _payload_values),
+)
+_wire_images = st.one_of(
+    st.none(),
+    st.dictionaries(_text, _item_values, max_size=4).map(json.dumps),
+    st.sampled_from(["{not json", "", "null", "3", "[1, 2]", '{"a": 1}',
+                     '{"a": {"S": "x"}', '{"a": {"N": NaN}}']),
+)
+
+
+@given(_wire_images, _wire_images, _wire_images)
+@settings(max_examples=400, deadline=None)
+def test_parse_alone_decides_dead_letters(new_raw, old_raw, keys_raw):
+    """``_parse_record`` raises exactly when ``_diff_record`` reports an
+    error, with that error's text; on every parsed pair the diff and
+    the canonical dumps run without raising."""
+    out = _diff_record(new_raw, old_raw, keys_raw, "P#1", None)
+    try:
+        new_img, old_img, _, _ = _parse_record(new_raw, old_raw, keys_raw, "P#1", None)
+    except Exception as exc:  # noqa: BLE001 - the error itself is compared
+        assert out == (None,) * 7 + (f"{type(exc).__name__}: {exc}",)
+        return
+    assert out[7] is None
+    for a, b in ((new_img, old_img), (old_img, new_img)):
+        _, before, after = compare_images(a, b)
+        for doc in (before, after, a, b):
+            dumps_canonical(doc)
+
+
+def _nested_s(depth: int, leaf) -> str:
+    """An item whose S payload nests ``depth`` documents around ``leaf``."""
+    return ('{"k": {"S": ' + '{"a": ' * depth + json.dumps(leaf) + "}" * depth
+            + '}, "id": {"S": "x"}}')
+
+
+def _nested_s_lists(depth: int, leaf) -> str:
+    return '{"k": {"S": ' + "[" * depth + json.dumps(leaf) + "]" * depth + "}}"
+
+
+def _nested_m(depth: int, leaf) -> str:
+    return ('{"k": ' + '{"M": {"a": ' * depth + '{"L": [{"N": "%s"}]}' % leaf
+            + "}}" * depth + "}")
+
+
+@pytest.mark.parametrize("wire,leaves", [
+    (_nested_s, ([1], [2])),
+    (_nested_s_lists, (1, 2)),
+    (_nested_m, ("1.5", "2.5")),
+])
+def test_parse_fails_first_at_the_recursion_limit(wire, leaves):
+    """Around the deepest image that still parses, the diff and dumps
+    never raise, and both mappers dead-letter the same records."""
+
+    def parses(depth):
+        try:
+            _parse_record(wire(depth, leaves[0]), wire(depth, leaves[1]),
+                          None, "P#1", None)
+        except RecursionError:
+            return False
+        return True
+
+    lo, hi = 1, 4 * sys.getrecursionlimit()
+    while lo < hi:
+        mid = (lo + hi + 1) // 2
+        lo, hi = (mid, hi) if parses(mid) else (lo, mid - 1)
+    depths = range(lo - 40, lo + 4)
+    for d in depths:
+        out = _diff_record(wire(d, leaves[0]), wire(d, leaves[1]), None, "P#1", None)
+        assert (out[7] is None) == (d <= lo)
+
+    pdf = pd.DataFrame({
+        "event_id": [f"e{d}" for d in depths],
+        "seq": list(depths), "ts": None, "operation": "MODIFY", "size_bytes": 10,
+        "new_image": [wire(d, leaves[0]) for d in depths],
+        "old_image": [wire(d, leaves[1]) for d in depths],
+        "pk": "P#1", "sk": None,
+    })
+    events = pd.concat(_diff_batches(iter([pdf])))
+    dead = pd.concat(_dead_letter_batches(iter([pdf])))
+    # the mappers run a few frames deeper than this test: the limit
+    # still falls inside ``depths``
+    assert 0 < len(dead) < len(depths)
+    assert set(events.event_id[events.error.notna()]) == set(dead.event_id)

@@ -2,6 +2,7 @@
 
 import json
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from cdk_dynamodb_cdc_spark.operators.claim_check import (
@@ -9,6 +10,7 @@ from cdk_dynamodb_cdc_spark.operators.claim_check import (
     write_side_store,
 )
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
+    _dead_letter_batches,
     _diff_record,
     cdc_change_events,
     pk_filter,
@@ -97,6 +99,44 @@ def test_quarantine_collects_parse_errors(spark):
     q = quarantine(cdc_fixture_df(spark)).collect()
     assert [r["event_id"] for r in q] == ["ev-malformed"]
     assert "JSONDecodeError" in q[0]["error"]
+
+
+def test_dead_letter_contract(spark):
+    """Dead letters keep the event columns, in order and with their
+    types, plus ``error``; every diff and image column is NULL."""
+    src = cdc_fixture_df(spark)
+    q = quarantine(src)
+    layout = [(f.name, f.dataType.simpleString()) for f in q.schema]
+    assert layout == [
+        ("event_id", "string"), ("seq", "bigint"), ("ts", "timestamp"),
+        ("operation", "string"), ("pk", "string"), ("sk", "string"),
+        ("attributes_changed", "array<string>"), ("before", "string"),
+        ("after", "string"), ("new_image", "string"), ("old_image", "string"),
+        ("images_url", "string"), ("error", "string"),
+    ]
+    assert q.schema.fields[:-1] == cdc_change_events(src).schema.fields
+    nulls = ["pk", "sk", "attributes_changed", "before", "after",
+             "new_image", "old_image"]
+    rows = q.collect()
+    assert rows and all(r[c] is None for r in rows for c in nulls)
+
+
+def test_dead_letter_batches_yield_only_failing_rows():
+    good = json.dumps({"v": {"S": "x"}})
+    pdf = pd.DataFrame({
+        "event_id": ["a", "b", "c"], "seq": [1, 2, 3],
+        "ts": pd.to_datetime(["2024-01-01"] * 3),
+        "operation": ["INSERT", "MODIFY", "REMOVE"], "size_bytes": [10, 20, 30],
+        "new_image": [good, good, None], "old_image": [None, "{not json", good],
+        "pk": ["P#1", "P#2", "P#3"], "sk": ["S", "S", "S"],
+    })
+    out = list(_dead_letter_batches(iter([pdf])))
+    assert len(out) == 1
+    row, = out[0].to_dict("records")
+    assert list(out[0].columns) == [
+        "event_id", "seq", "ts", "operation", "size_bytes", "error"]
+    assert row["event_id"] == "b" and row["seq"] == 2 and row["size_bytes"] == 20
+    assert row["error"].startswith("JSONDecodeError: ")
 
 
 def _plan_node_names(df) -> list[str]:
